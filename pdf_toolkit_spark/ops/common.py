@@ -52,32 +52,60 @@ SQL_HASH32 = "(('0x' || substr(md5({e}),1,8))::BIGINT)"
 SQL_HASH60 = "(('0x' || substr(md5({e}),1,15))::BIGINT)"
 SQL_NORM = "trim(regexp_replace(lower({e}), '[^a-z0-9]+', ' ', 'g'))"
 
-#: Per-invocation persisted relations (prefix_scan intermediates and
-#: the ad-hoc cross-branch pins in text.py/sketches.py), tracked so a
-#: long-lived session can reclaim the cached storage. Mirrors
-#: dedup.py's registry, but keyless: these pins are plan-internal and
-#: never reused across calls, so a flat list suffices.
-_PERSISTED: list[DataFrame] = []
-
-#: Keyed cross-QUERY persists (mirrors dedup.py's registry): relations
-#: several queries() entries rebuild from scratch — e.g. the trigram
-#: count relation shared by trigram_lm_score / the perplexity tiering
-#: pair / dsir_weight — keyed by (kind, sf_dir) so one bench session
-#: computes the explode+aggregate once. Released with everything else
-#: by :func:`release_caches`.
+#: The ops layer's one cache registry. Spark has no cross-branch
+#: subplan sharing, so a relation feeding N plan branches (or N
+#: queries) would otherwise be recomputed N times; persisting it once
+#: and tracking it here lets :func:`release_caches` reclaim the storage
+#: in a long-lived session.
+#:
+#: ``_KEYED``: cross-query shared builds keyed by (kind, sf_dir) —
+#: shingles, signatures, fingerprints, LSH buckets, k-means centroids,
+#: PQ codebooks, the trigram relation.
+#: ``_PINS``: per-call pins (prefix_scan intermediates, ad-hoc
+#: cross-branch pins), plan-internal and never reused across calls.
+#: ``_MEMO``: plan-time scalars (row counts, embedding width).
 _KEYED: dict[tuple, DataFrame] = {}
+_PINS: list[DataFrame] = []
+_MEMO: dict[tuple, object] = {}
 
 
 def cached(key: tuple, build) -> DataFrame:
-    """Persist-once registry for relations shared ACROSS queries (the
-    dedup/similarity module-cache pattern, hosted here for ops that
-    live in modules without their own registry)."""
+    """Persist-once: the relation ``build()`` returns, persisted on the
+    first call for ``key`` and shared by every later one."""
 
     df = _KEYED.get(key)
     if df is None:
         df = build().persist()
         _KEYED[key] = df
     return df
+
+
+def replace_cached(key: tuple, df: DataFrame) -> DataFrame:
+    """Register an already-persisted ``df`` under ``key``, unpersisting
+    the relation the key held before. For results materialized by a
+    driver-side loop, which :func:`cached` cannot build lazily."""
+
+    old = _KEYED.pop(key, None)
+    if old is not None:
+        old.unpersist()
+    _KEYED[key] = df
+    return df
+
+
+def memo(key: tuple, compute):
+    """Plan-time scalar ``compute()``, computed once per ``key`` until
+    the next :func:`release_caches`."""
+
+    if key not in _MEMO:
+        _MEMO[key] = compute()
+    return _MEMO[key]
+
+
+def row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of a table, for corpus-size-derived parameters (a
+    parquet-metadata count; cheap even at fleet scale)."""
+
+    return memo(("rows", sf_dir, name), lambda: table(spark, sf_dir, name).count())
 
 
 def register_persist(df: DataFrame) -> DataFrame:
@@ -91,20 +119,19 @@ def register_persist(df: DataFrame) -> DataFrame:
     never the process-global :func:`release_caches`, which would
     yank every other in-flight query's pins too."""
 
-    _PERSISTED.append(df.persist())
+    _PINS.append(df.persist())
     return df
 
 
 def release_caches() -> None:
-    """Unpersist every relation registered via :func:`register_persist`.
+    """Unpersist every registered relation and clear the scalar memo.
     Call between corpora (or per bench entry) in a long-lived session."""
 
-    for df in _PERSISTED:
+    for df in [*_PINS, *_KEYED.values()]:
         df.unpersist()
-    _PERSISTED.clear()
-    for df in _KEYED.values():
-        df.unpersist()
+    _PINS.clear()
     _KEYED.clear()
+    _MEMO.clear()
 
 
 def prefix_scan(
@@ -134,7 +161,7 @@ def prefix_scan(
     samples its boundaries, so the pid→base map from pass 2 is only
     valid for the exact partitioning pass 1 produced — a recompute
     could re-sample different boundaries. Persisting pins it (tracked
-    in the module registry; :func:`release_caches` reclaims it).
+    in the registry; :func:`release_caches` reclaims it).
     """
 
     from pyspark.sql import Window

@@ -306,7 +306,7 @@ def run_extraction(
     Outputs under ``out_dir``: ``spans`` (bucketed by doc_id), ``media``
     (content-addressed PNG blobs — written BEFORE spans so a committed
     doc always has resolvable media_refs), ``lineage`` (timestamped
-    per-page action log), ``metrics`` (one row per run with ISO
+    per-page action log, also written before spans), ``metrics`` (one row per run with ISO
     timestamps and the reconstructed ``command``, the reference's
     manifest metadata, manifest.py:90-106 / cli.py:434-438).
 
@@ -410,13 +410,13 @@ def run_extraction(
                         raise
             media_tbl.write.mode(write_mode).parquet(media_path)
         if spans_path:
-            out_spans = spans.withColumn(
-                "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-            )
-            # Iceberg analog: partitionedBy(bucket(N, doc_id)) + snapshot
-            # commit; parquet append keeps the same layout locally.
-            out_spans.write.mode(write_mode).partitionBy("bucket").parquet(spans_path)
-
+            # Lineage goes BEFORE spans. The spans append re-caches every
+            # cached plan that reads spans_path, and on a resumed run
+            # ``records`` does (the anti-join): re-read after the append,
+            # it would anti-join away every doc this run just committed
+            # and leave their lineage empty. The order also means a crash
+            # between the two sinks leaves lineage for uncommitted docs
+            # (re-extracted on resume), never committed docs without it.
             lineage_out = lineage_rows.select(
                 F.lit(run_id).alias("run_id"),
                 "doc_id",
@@ -426,6 +426,13 @@ def run_extraction(
                 F.current_timestamp().alias("recorded_at"),
             )
             lineage_out.write.mode(write_mode).parquet(f"{out_dir}/lineage")
+
+            out_spans = spans.withColumn(
+                "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+            )
+            # Iceberg analog: partitionedBy(bucket(N, doc_id)) + snapshot
+            # commit; parquet append keeps the same layout locally.
+            out_spans.write.mode(write_mode).partitionBy("bucket").parquet(spans_path)
 
         metrics = {
             "run_id": run_id,
@@ -446,12 +453,12 @@ def run_extraction(
                 [tuple(metrics[f] for f in (
                     "run_id", "docs_processed", "pages_parsed", "spreads_split",
                     "rotations_fixed", "crop_only", "elapsed_sec", "parallelism",
-                    "started_at", "ended_at", "command",
+                    "started_at", "ended_at", "command", "docs_failed",
                 ))],
                 schema="run_id string, docs_processed long, pages_parsed long, "
                        "spreads_split long, rotations_fixed long, crop_only long, "
                        "elapsed_sec double, parallelism string, started_at string, "
-                       "ended_at string, command string",
+                       "ended_at string, command string, docs_failed long",
             )
             metrics_df.write.mode("append").parquet(f"{out_dir}/metrics")
         return RunResult(run_id, metrics, spans_path)
@@ -461,7 +468,7 @@ def run_extraction(
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the run-metrics table. mergeSchema: the metrics schema has
-    widened across engine versions (8 -> 11 columns) and parquet
+    widened across engine versions (8 -> 12 columns) and parquet
     otherwise picks an arbitrary file's schema for a mixed directory,
     silently dropping started_at/ended_at/command."""
 

@@ -1250,10 +1250,11 @@ def pack_process_batch(spark: SparkSession, out_dir: str):
         )
         toks = batch_df.select("doc_id", n_tokens.alias("n_tokens"))
         carry = _carry(epoch_id)
-        # scope the prefix scan's pin to THIS batch: unpersisting via
-        # the process-global release_caches() would also yank any
-        # concurrent query's pins (whose pid->base maps are
-        # non-recomputable — see prefix_scan)
+        # scope the prefix scan's pin to THIS batch, outside the ops
+        # layer's one cache registry: its process-global
+        # common.release_caches() would also yank any concurrent
+        # query's pins (whose pid->base maps are non-recomputable —
+        # see prefix_scan)
         pins: list = []
         packed = prefix_scan(toks, ["doc_id"], "n_tokens", "local", pins=pins)
         out = packed.select(

@@ -237,3 +237,91 @@ def test_dsir_log2_quantization_agrees_across_engines_at_boundaries(spark):
 
     assert got_spark == expected
     assert got_duck == expected
+
+
+# --- the ops layer's one cache registry (ops/common.py) ---------------
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_registry_builds_each_key_once(spark):
+    from pdf_toolkit_spark.ops import common
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(10)
+
+    key = ("test_registry_once", SF_DIR)
+    first = common.cached(key, build)
+    assert common.cached(key, build) is first
+    assert len(builds) == 1
+    common.release_caches()
+
+
+def test_release_caches_drops_keyed_and_pinned_relations_and_memo(spark):
+    from pdf_toolkit_spark.ops import common, dedup, similarity
+
+    assert dedup.release_caches is similarity.release_caches is common.release_caches
+    common.release_caches()
+    before = _cached_rdd_ids(spark)
+    keyed = common.cached(("test_registry_release", SF_DIR), lambda: spark.range(100))
+    pinned = common.register_persist(spark.range(200))
+    assert keyed.count() == 100 and pinned.count() == 200
+    ours = _cached_rdd_ids(spark) - before
+    assert len(ours) == 2  # one keyed relation + one pin, both materialized
+
+    computed = []
+    assert common.memo(("test_registry_memo",), lambda: computed.append(1) or 7) == 7
+    assert common.memo(("test_registry_memo",), lambda: computed.append(1) or 8) == 7
+
+    common.release_caches()
+    assert not ours & _cached_rdd_ids(spark)
+    assert common.memo(("test_registry_memo",), lambda: computed.append(1) or 9) == 9
+    assert len(computed) == 2
+    common.release_caches()
+
+
+def test_prefix_scan_caller_pins_survive_release_caches(spark):
+    from pyspark.sql import functions as F
+
+    from pdf_toolkit_spark.ops import common
+
+    before = _cached_rdd_ids(spark)
+    pins: list = []
+    out = common.prefix_scan(
+        spark.range(40).withColumn("v", F.lit(1)), ["id"], "v", "off",
+        num_parts=4, pins=pins,
+    )
+    assert len(pins) == 1
+    pinned = _cached_rdd_ids(spark) - before
+    assert len(pinned) == 1  # the caller-scoped pin, materialized by the scan
+    common.release_caches()
+    assert pinned <= _cached_rdd_ids(spark)
+    assert {(r["id"], r["off"]) for r in out.collect()} == {(i, i) for i in range(40)}
+    pins[0].unpersist()
+
+
+def test_release_caches_forgets_embedding_width(spark, tmp_path):
+    import pandas as pd
+
+    from pdf_toolkit_spark.ops import common
+    from pdf_toolkit_spark.ops.similarity import _dim
+
+    sf_dir = str(tmp_path)
+
+    def write_embeddings(width: int) -> None:
+        pd.DataFrame({
+            "vec_id": [0, 1, 2],
+            "embedding": [[0.5] * width] * 3,
+        }).to_parquet(f"{sf_dir}/embeddings.parquet", index=False)
+
+    write_embeddings(4)
+    assert _dim(spark, sf_dir) == 4
+    common.release_caches()
+    write_embeddings(8)
+    assert _dim(spark, sf_dir) == 8
+    common.release_caches()

@@ -9,7 +9,9 @@ import pytest
 from pdf_toolkit_spark.corpus import corpus_config, make_document
 from pdf_toolkit_spark.extract import extract_document
 from pdf_toolkit_spark.spark.input import corpus_dataframe
-from pdf_toolkit_spark.spark.job import build_pipeline, run_extraction
+from pdf_toolkit_spark.spark.job import (
+    build_pipeline, read_lineage, read_metrics, run_extraction,
+)
 
 CFG = dict(corpus_config(), pages_per_chunk=32)  # force chunking on megas
 N_DOCS = 24
@@ -149,6 +151,10 @@ def test_resume_skips_committed_docs(spark, tmp_path):
     superset = corpus_dataframe(spark, 10, seed=42, mega_every=0)
     r2 = run_extraction(spark, superset, CFG, out_dir=out, run_id="r2")
     assert r2.metrics["docs_processed"] == 4
+    # ... and the resumed run logs lineage for exactly those 4 docs
+    new_ids = {make_document(i, seed=42, mega_every=0)["doc_id"] for i in range(6, 10)}
+    r2_lineage = read_lineage(spark, out).filter("run_id = 'r2'")
+    assert {r["doc_id"] for r in r2_lineage.select("doc_id").distinct().collect()} == new_ids
 
     # Third run: nothing left to do.
     r3 = run_extraction(spark, superset, CFG, out_dir=out, run_id="r3")
@@ -230,7 +236,7 @@ def test_dry_run_writes_nothing_and_reports_plan(spark, tmp_path):
     assert not os.path.exists(f"{out}/spans")
 
 
-def test_corrupt_documents_are_isolated_not_fatal(spark):
+def test_corrupt_documents_are_isolated_not_fatal(spark, tmp_path):
     """One malformed PDF must not kill the stage: it becomes an error
     lineage row, emits no spans, and healthy docs still extract."""
 
@@ -249,9 +255,13 @@ def test_corrupt_documents_are_isolated_not_fatal(spark):
     errors = records_df.filter("status = 'error'").select("doc_id").distinct().collect()
     assert {r["doc_id"] for r in errors} == {"corrupt", "truncated"}
 
-    result = run_extraction(spark, df, CFG)
+    out = str(tmp_path / "out")
+    result = run_extraction(spark, df, CFG, out_dir=out, run_id="c1")
     assert result.metrics["docs_processed"] == 1
     assert result.metrics["docs_failed"] == 2
+    # the failure count is persisted, not just reported in memory
+    persisted = read_metrics(spark, out).filter("run_id = 'c1'").collect()[0]
+    assert persisted["docs_failed"] == 2
 
 
 def test_plan_has_single_python_stage(spark):

@@ -2,7 +2,7 @@
 oracle-compare loop (Spark run -> toPandas, DuckDB oracle run). Prints
 one line per query sorted by total time, plus the grand total — the
 driver's correctness harness truncates on a time budget, so this is
-the feedback loop for keeping all 75 entries inside it.
+the feedback loop for keeping all 101 declared queries inside it.
 
 Usage: SPARK_GRAFT_CPUS=8 python tools/profile_queries.py [sf_dir] [name_filter...]
 """
